@@ -39,9 +39,10 @@ object Queries {
 
   private def flaggedTierQuery(tier: TierSpec): QueryDef = QueryDef(
     run = (s, dir) => {
-      val finest = Rollup.fromRawFlagged(pages(s, dir), TierSpec.T5m)
+      val finest = Rollup.fromRaw(pages(s, dir), TierSpec.T5m,
+                                  family = Rollup.Flagged)
       TierSpec.cascade.takeWhile(_.seconds <= tier.seconds).tail
-        .foldLeft(finest)((finer, t) => Rollup.cascadeFlagged(finer, t))
+        .foldLeft(finest)((finer, t) => Rollup.cascade(finer, t))
         .withColumn("bucket_flag", Rollup.bucketFlag)
     },
     oracle = Some(

@@ -35,7 +35,6 @@ final class BitWriter(initialBytes: Int = 64) {
   }
 
   def toBytes: Array[Byte] = java.util.Arrays.copyOf(buf, (nBits + 7) >>> 3)
-  def bitLength: Int = nBits
 }
 
 /** Bit-level reader matching [[BitWriter]]'s layout. */

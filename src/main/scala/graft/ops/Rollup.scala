@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.TierSpec
+import graft.core.{Flag, TierSpec}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -23,10 +23,24 @@ import org.apache.spark.sql.functions._
   * Plan shape: one hash aggregate per tier (partial → final, map-side
   * combine free from Catalyst); no joins, no windows. The groupBy keys
   * `(series, bucket)` hash-partition evenly as long as series
-  * cardinality ≫ shuffle partitions; hot-series skew is handled by the
-  * two-phase salted variant [[fromRawSalted]].
+  * cardinality ≫ shuffle partitions; a hot series is absorbed by the
+  * map-side partial aggregate, which ships one row per (series, bucket)
+  * per task. A salted two-phase variant was measured against it on the
+  * benchmark's Zipf-skewed `many_series_zipf` workload (one domain holds
+  * a quarter of the rows; 4 cores, 14 alternating pairs): median refresh
+  * 13.58 s salted vs 13.69 s plain, inside the plain runs' spread, so it
+  * was removed.
   */
 object Rollup {
+
+  /** One mergeable measure: output column `name`, its aggregate over
+    * raw rows (`perRow`), its merge of a finer tier's `name` column, and
+    * the DuckDB SQL computing the same value straight from raw rows
+    * (None where DuckDB has no equivalent, e.g. xxhash64).
+    */
+  final case class Measure(name: String, perRow: Column,
+                           merge: Column => Column,
+                           oracle: Option[String] = None)
 
   /** Epoch-aligned tumbling bucket start for a tier. */
   def bucket(epoch: Column, tier: TierSpec): Column =
@@ -37,34 +51,71 @@ object Rollup {
     */
   def micros(value: Column): Column = floor(value * lit(1000000L)).cast("long")
 
-  private val measures: Seq[Column] = Seq(
-    count(lit(1)).as("n"),
-    sum(col("n_chars")).as("sum_chars"),
-    sum(col("value_micros")).as("sum_value_micros"),
-    min(col("value_micros")).as("min_value_micros"),
-    max(col("value_micros")).as("max_value_micros"))
+  private val microsSql = "CAST(floor(value * 1000000) AS BIGINT)"
 
-  private val merged: Seq[Column] = Seq(
-    sum(col("n")).as("n"),
-    sum(col("sum_chars")).as("sum_chars"),
-    sum(col("sum_value_micros")).as("sum_value_micros"),
-    min(col("min_value_micros")).as("min_value_micros"),
-    max(col("max_value_micros")).as("max_value_micros"))
+  /** sum/min/max of the quantized value (or of `keep(value)`); the SQL
+    * side mirrors `keep` as `keepSql`. */
+  private def valueMeasures(keep: Column => Column,
+                            keepSql: String => String): Seq[Measure] = {
+    def m(name: String, agg: Column => Column, fn: String) =
+      Measure(name, agg(keep(col("value_micros"))), agg,
+              Some(s"$fn(${keepSql(microsSql)})"))
+    Seq(m("sum_value_micros", sum, "sum"),
+        m("min_value_micros", min, "min"),
+        m("max_value_micros", max, "max"))
+  }
+
+  private val rows = Measure("n", count(lit(1)), sum, Some("count(*)"))
+  private val chars = Measure("sum_chars", sum(col("n_chars")), sum,
+                              Some("sum(n_chars)"))
+
+  /** Value measures over every row. */
+  val Plain: Seq[Measure] = Seq(rows, chars) ++ valueMeasures(identity, identity)
+
+  /** Three-state missingness through the cascade (SURVEY §7.2):
+    * per-state counts travel as plain sums (exact at every tier); value
+    * measures aggregate OK rows only — NODATA carries no measurement and
+    * UNDETECT is below detection, so neither may contaminate
+    * sums/extrema (reference semantics: the two missing sentinels
+    * round-trip raw→output untouched by aggregation, the reference's
+    * tests/test_vpts.py:109-139). A bucket with zero OK
+    * rows has null value measures, and null-skipping sum/min/max keep
+    * that exact through every merge. Needs a tier-0 `flag` column.
+    */
+  val Flagged: Seq[Measure] = {
+    def state(name: String, f: Byte) =
+      Measure(name, sum(when(col("flag") === f, 1L).otherwise(0L)), sum,
+              Some(s"sum(CASE WHEN flag = $f THEN 1 ELSE 0 END)"))
+    Seq(rows,
+        state("n_ok", Flag.OK), state("n_nodata", Flag.NODATA),
+        state("n_undetect", Flag.UNDETECT),
+        chars) ++
+      valueMeasures(when(col("flag") === Flag.OK, _),
+                    v => s"CASE WHEN flag = ${Flag.OK} THEN $v END")
+  }
+
+  /** Per-row invariant hash folded into a per-bucket `text_sha` via
+    * bit_xor — XOR is associative and commutative, so every coarser
+    * tier's `text_sha` is the XOR over all contributing raw rows: the
+    * byte-identical-text invariant travels the whole cascade as one
+    * 8-byte column.
+    */
+  private def textShaOf(hash: Column) = Measure("text_sha", bit_xor(hash), bit_xor)
+
+  private val mergeOf: Map[String, Column => Column] =
+    (Plain ++ Flagged :+ textShaOf(col("text_sha"))).map(m => m.name -> m.merge).toMap
 
   /** Raw web pages → finest tier. `pages` needs columns
-    * (seriesCols…, warc_epoch, n_chars, value).
-    *
-    * `textSha`: optional per-row invariant hash (e.g.
-    * `xxhash64(WebPages.extractText(col("html")))`). Folded into a
-    * per-bucket `text_sha` via bit_xor — XOR is associative and
-    * commutative, so every coarser tier's `text_sha` is the XOR over
-    * all contributing raw rows: the byte-identical-text invariant
-    * travels through the whole cascade as one 8-byte column.
+    * (seriesCols…, warc_epoch, n_chars, value), plus `flag` for
+    * [[Flagged]]. `textSha`: optional per-row invariant hash (e.g.
+    * `xxhash64(WebPages.extractText(col("html")))`), carried as
+    * `text_sha`.
     */
   def fromRaw(pages: DataFrame, tier: TierSpec,
               seriesCols: Seq[String] = Seq("domain"),
-              textSha: Option[Column] = None): DataFrame = {
-    val aggs = measures ++ textSha.map(c => bit_xor(c).as("text_sha")).toSeq
+              textSha: Option[Column] = None,
+              family: Seq[Measure] = Plain): DataFrame = {
+    val aggs = (family ++ textSha.map(textShaOf)).map(m => m.perRow.as(m.name))
     pages
       .withColumn("value_micros", micros(col("value")))
       .groupBy(seriesCols.map(col) :+ bucket(col("warc_epoch"), tier): _*)
@@ -72,169 +123,49 @@ object Rollup {
   }
 
   /** Finer tier → coarser tier (partial-agg merge). Input must be the
-    * output of [[fromRaw]] or a previous [[cascade]] step. A `text_sha`
-    * column, if present, merges by XOR.
+    * output of [[fromRaw]] or a previous [[cascade]] step; every measure
+    * column it carries, of either family and `text_sha`, is merged, in
+    * the input's column order.
     */
   def cascade(finer: DataFrame, tier: TierSpec,
               seriesCols: Seq[String] = Seq("domain")): DataFrame = {
-    val aggs =
-      if (finer.columns.contains("text_sha"))
-        merged :+ bit_xor(col("text_sha")).as("text_sha")
-      else merged
+    val aggs = finer.columns.toSeq.flatMap(c => mergeOf.get(c).map(_(col(c)).as(c)))
+    require(aggs.nonEmpty,
+      s"no rollup measure columns in ${finer.columns.mkString("[", ", ", "]")}")
     finer
       .groupBy(seriesCols.map(col) :+ bucket(col("bucket_epoch"), tier): _*)
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Full cascade: raw → Map(tierName → rollup), each tier derived from
-    * the previous. Caller may persist intermediate tiers.
-    */
-  def allTiers(pages: DataFrame,
-               seriesCols: Seq[String] = Seq("domain")): Map[String, DataFrame] = {
-    val finest = fromRaw(pages, TierSpec.cascade.head, seriesCols)
-    TierSpec.cascade.tail
-      .scanLeft(TierSpec.cascade.head.name -> finest) { case ((_, finer), t) =>
-        t.name -> cascade(finer, t, seriesCols)
-      }
-      .toMap
-  }
-
-  // ------------------------------------------------------------------
-  // Three-state missingness through the cascade (SURVEY §7.2)
-  // ------------------------------------------------------------------
-
-  /** Flag-aware measures: per-state counts travel as plain sums (exact
-    * at every tier); value measures aggregate OK rows only — NODATA
-    * carries no measurement and UNDETECT is below detection, so neither
-    * may contaminate sums/extrema (reference semantics: the two missing
-    * sentinels round-trip raw→output untouched by aggregation,
-    * /root/reference/tests/test_vpts.py:109-139). A bucket with zero OK
-    * rows has null value measures, and null-skipping sum/min/max keep
-    * that exact through every merge.
-    */
-  private val flagMeasures: Seq[Column] = {
-    import graft.core.Flag
-    def cnt(f: Byte, name: String) =
-      sum(when(col("flag") === f, 1L).otherwise(0L)).as(name)
-    Seq(
-      count(lit(1)).as("n"),
-      cnt(Flag.OK, "n_ok"), cnt(Flag.NODATA, "n_nodata"),
-      cnt(Flag.UNDETECT, "n_undetect"),
-      sum(col("n_chars")).as("sum_chars"),
-      sum(when(col("flag") === Flag.OK, col("value_micros"))).as("sum_value_micros"),
-      min(when(col("flag") === Flag.OK, col("value_micros"))).as("min_value_micros"),
-      max(when(col("flag") === Flag.OK, col("value_micros"))).as("max_value_micros"))
-  }
-
-  private val flagMerged: Seq[Column] = Seq(
-    sum(col("n")).as("n"),
-    sum(col("n_ok")).as("n_ok"),
-    sum(col("n_nodata")).as("n_nodata"),
-    sum(col("n_undetect")).as("n_undetect"),
-    sum(col("sum_chars")).as("sum_chars"),
-    sum(col("sum_value_micros")).as("sum_value_micros"),
-    min(col("min_value_micros")).as("min_value_micros"),
-    max(col("max_value_micros")).as("max_value_micros"))
-
-  /** Raw pages (with a tier-0 `flag` column) → finest flagged tier. */
+  /** [[fromRaw]] over the [[Flagged]] family. */
   def fromRawFlagged(pages: DataFrame, tier: TierSpec,
                      seriesCols: Seq[String] = Seq("domain"),
-                     textSha: Option[Column] = None): DataFrame = {
-    val aggs = flagMeasures ++ textSha.map(c => bit_xor(c).as("text_sha")).toSeq
-    pages
-      .withColumn("value_micros", micros(col("value")))
-      .groupBy(seriesCols.map(col) :+ bucket(col("warc_epoch"), tier): _*)
-      .agg(aggs.head, aggs.tail: _*)
-  }
+                     textSha: Option[Column] = None): DataFrame =
+    fromRaw(pages, tier, seriesCols, textSha, Flagged)
 
-  /** Finer flagged tier → coarser flagged tier. */
+  /** [[cascade]] of a flagged tier (the merge is family-blind). */
   def cascadeFlagged(finer: DataFrame, tier: TierSpec,
-                     seriesCols: Seq[String] = Seq("domain")): DataFrame = {
-    val aggs =
-      if (finer.columns.contains("text_sha"))
-        flagMerged :+ bit_xor(col("text_sha")).as("text_sha")
-      else flagMerged
-    finer
-      .groupBy(seriesCols.map(col) :+ bucket(col("bucket_epoch"), tier): _*)
-      .agg(aggs.head, aggs.tail: _*)
-  }
+                     seriesCols: Seq[String] = Seq("domain")): DataFrame =
+    cascade(finer, tier, seriesCols)
 
   /** Derived per-bucket flag from the state counts — any tier, no extra
     * storage: observed (OK) beats below-detection (UNDETECT) beats
     * not-measured (NODATA).
     */
-  def bucketFlag: Column = {
-    import graft.core.Flag
+  def bucketFlag: Column =
     when(col("n_ok") > 0, lit(Flag.OK.toInt))
       .when(col("n_undetect") > 0, lit(Flag.UNDETECT.toInt))
       .otherwise(lit(Flag.NODATA.toInt)).cast("int")
-  }
 
-  /** Skew-resistant flagged variant: two-phase flag-aware aggregation —
-    * phase 1 over (series, salt, bucket) spreads a Zipf-head series
-    * over `saltBuckets` reducers, phase 2 merges the partials. Exactly
-    * equal to [[fromRawFlagged]] (all measures mergeable; XOR text_sha
-    * included) — equality is spec-pinned, so the production runner can
-    * flip it on for hot-domain inputs without a correctness delta.
+  /** DuckDB select list of a family's measures, matching [[fromRaw]]
+    * composed through any number of [[cascade]] steps (sums of sums =
+    * direct sums; casts pin BIGINT vs DuckDB's HUGEINT sum type).
     */
-  def fromRawFlaggedSalted(pages: DataFrame, tier: TierSpec, saltBuckets: Int,
-                           seriesCols: Seq[String] = Seq("domain"),
-                           textSha: Option[Column] = None): DataFrame = {
-    val aggs1 = flagMeasures ++ textSha.map(c => bit_xor(c).as("text_sha")).toSeq
-    val salted = pages
-      .withColumn("value_micros", micros(col("value")))
-      .withColumn("_salt", pmod(col("event_id"), lit(saltBuckets)))
-      .groupBy(seriesCols.map(col) ++
-        Seq(col("_salt"), bucket(col("warc_epoch"), tier)): _*)
-      .agg(aggs1.head, aggs1.tail: _*)
-    val aggs2 =
-      if (textSha.isDefined) flagMerged :+ bit_xor(col("text_sha")).as("text_sha")
-      else flagMerged
-    salted
-      .groupBy(seriesCols.map(col) :+ col("bucket_epoch"): _*)
-      .agg(aggs2.head, aggs2.tail: _*)
-  }
+  private def oracleOf(family: Seq[Measure]): String =
+    family.map(m => s"CAST(${m.oracle.get} AS BIGINT) AS ${m.name}").mkString(",\n")
 
-  /** DuckDB oracle measures matching [[fromRawFlagged]] composed through
-    * any number of [[cascadeFlagged]] steps.
-    */
-  val flagOracleMeasures: String =
-    """CAST(count(*) AS BIGINT) AS n,
-      |CAST(sum(CASE WHEN flag = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_ok,
-      |CAST(sum(CASE WHEN flag = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_nodata,
-      |CAST(sum(CASE WHEN flag = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_undetect,
-      |CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-      |CAST(sum(CASE WHEN flag = 0 THEN CAST(floor(value * 1000000) AS BIGINT) END) AS BIGINT) AS sum_value_micros,
-      |CAST(min(CASE WHEN flag = 0 THEN CAST(floor(value * 1000000) AS BIGINT) END) AS BIGINT) AS min_value_micros,
-      |CAST(max(CASE WHEN flag = 0 THEN CAST(floor(value * 1000000) AS BIGINT) END) AS BIGINT) AS max_value_micros""".stripMargin
-
-  /** Skew-resistant variant: two-phase aggregation with a salt on the
-    * series key. Phase 1 aggregates (series, salt, bucket) — spreading a
-    * hot series over `saltBuckets` reducers; phase 2 merges the partials.
-    * Use when one domain dominates (Zipf head at Common-Crawl scale).
-    */
-  def fromRawSalted(pages: DataFrame, tier: TierSpec, saltBuckets: Int,
-                    seriesCols: Seq[String] = Seq("domain")): DataFrame = {
-    val salted = pages
-      .withColumn("value_micros", micros(col("value")))
-      .withColumn("_salt", pmod(col("event_id"), lit(saltBuckets)))
-      .groupBy(seriesCols.map(col) ++ Seq(col("_salt"), bucket(col("warc_epoch"), tier)): _*)
-      .agg(measures.head, measures.tail: _*)
-    salted
-      .groupBy(seriesCols.map(col) :+ col("bucket_epoch"): _*)
-      .agg(merged.head, merged.tail: _*)
-  }
-
-  /** DuckDB oracle measure list matching [[fromRaw]] composed through any
-    * number of [[cascade]] steps (sums of sums = direct sums; casts pin
-    * BIGINT vs DuckDB's HUGEINT sum type).
-    */
-  val oracleMeasures: String =
-    """CAST(count(*) AS BIGINT) AS n,
-      |CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-      |CAST(sum(CAST(floor(value * 1000000) AS BIGINT)) AS BIGINT) AS sum_value_micros,
-      |CAST(min(CAST(floor(value * 1000000) AS BIGINT)) AS BIGINT) AS min_value_micros,
-      |CAST(max(CAST(floor(value * 1000000) AS BIGINT)) AS BIGINT) AS max_value_micros""".stripMargin
+  val oracleMeasures: String = oracleOf(Plain)
+  val flagOracleMeasures: String = oracleOf(Flagged)
 
   /** DuckDB oracle: direct rollup of the webpages CTE at one tier. */
   def oracleSql(tier: TierSpec): String =

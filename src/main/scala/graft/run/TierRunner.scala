@@ -33,8 +33,7 @@ import org.apache.spark.sql.functions._
   * and divides all tier widths except 30d, whose buckets are rebuilt
   * from any touched member day.
   */
-final class TierRunner(spark: SparkSession, root: String,
-                       saltBuckets: Option[Int] = None) {
+final class TierRunner(spark: SparkSession, root: String) {
 
   private def tableFor(tier: TierSpec): TierTable =
     new TierTable(s"$root/tier_${tier.name}", spark).init()
@@ -107,8 +106,6 @@ final class TierRunner(spark: SparkSession, root: String,
     touchedDays
   }
 
-  def rawSnapshot: Option[Long] = rawTable.currentSnapshotId
-
   /** Total rows in the current raw snapshot (manifest metadata, no scan). */
   def rawRows: Long = rawTable.currentManifest.map(_.totalRows).getOrElse(0L)
 
@@ -133,7 +130,7 @@ final class TierRunner(spark: SparkSession, root: String,
     val inputSnapshot = rawTable.currentSnapshotId.getOrElse(
       throw new IllegalStateException("no raw snapshot ingested"))
 
-    var entries = Vector.newBuilder[RunEntry]
+    val entries = Vector.newBuilder[RunEntry]
 
     // Dependency-aware failure isolation: if a tier's commit (or its
     // snapshot read) fails, every tier downstream of it is recorded as
@@ -143,88 +140,11 @@ final class TierRunner(spark: SparkSession, root: String,
     // which tiers reflect the current input.
     val failed = scala.collection.mutable.Set[String]()
 
-    // ---- 5m from raw (only touched days), then the cascade ----
-    var finer: DataFrame = null
-    for (tier <- TierSpec.cascade) {
-      val tbl = tableFor(tier)
-      val key = s"${tier.name}"
-      val upstream: Option[String] = tier match {
-        case TierSpec.T5m => None
-        case TierSpec.T1h => Some(TierSpec.T5m.name)
-        case TierSpec.T1d => Some(TierSpec.T1h.name)
-        case _            => Some(TierSpec.T1d.name)
-      }
-      val partitions: Set[String] =
-        if (tier.seconds <= TierSpec.T1d.seconds) touchedDays
-        else touchedDays.map(bucketStart(_, tier.seconds)) // containing 30d buckets
-      val already = partitions.filter(p => previous.get(s"$key/$p").contains("ok"))
-      val todo = partitions -- already
-      val t0 = System.nanoTime()
-      def elapsedMs: Long = (System.nanoTime() - t0) / 1000000L
-      if (todo.nonEmpty) {
-        if (upstream.exists(failed.contains)) {
-          failed += key
-          todo.foreach(p => entries += RunEntry(key, p, 0L, "skipped:upstream_failed", 0L))
-        } else try {
-          val source: DataFrame =
-            if (tier == TierSpec.T5m) {
-              // flagged measures: three-state missingness (OK/NODATA/
-              // UNDETECT counts, OK-only value aggregates) travels the
-              // whole production cascade. text_sha: the byte-identical-
-              // text invariant, hashed from the html payload per raw
-              // row and XOR-folded up every tier. saltBuckets (skew
-              // mode for Zipf-head domains) switches to the two-phase
-              // salted aggregation — spec-pinned equal.
-              val sha = Some(xxhash64(
-                graft.ingest.WebPages.extractText(col("html"))))
-              saltBuckets match {
-                case Some(k) => Rollup.fromRawFlaggedSalted(
-                  rawTable.read(touchedDays), tier, k, textSha = sha)
-                case None => Rollup.fromRawFlagged(
-                  rawTable.read(touchedDays), tier, textSha = sha)
-              }
-            }
-            else if (tier.seconds <= TierSpec.T1d.seconds)
-              Rollup.cascadeFlagged(finer, tier)
-            else {
-              // 30d: rebuild whole 30d buckets — read exactly the 1d
-              // day partitions that are members of a touched bucket
-              val members = memberDays(tableFor(TierSpec.T1d), todo, tier.seconds)
-              Rollup.cascadeFlagged(tableFor(TierSpec.T1d).read(members), tier)
-            }
-          val withPart = source.withColumn("day_epoch",
-            if (tier.seconds <= TierSpec.T1d.seconds)
-              col("bucket_epoch") - (col("bucket_epoch") % TierSpec.T1d.seconds)
-            else col("bucket_epoch"))
-          val lineage = todo.map(p =>
-            p -> PartitionLineage(inputSnapshot, "ok")).toMap
-          val m = tbl.commitOverwrite(withPart, "day_epoch", lineage)
-          val ms = elapsedMs
-          todo.foreach { p =>
-            val rows = m.partitions.get(p).map(_.rows).getOrElse(0L)
-            entries += RunEntry(key, p, rows, "ok", ms)
-          }
-        } catch {
-          case e: Exception =>
-            failed += key
-            todo.foreach(p => entries += RunEntry(key, p, 0L,
-              s"error:${e.getClass.getSimpleName}", elapsedMs))
-        }
-      }
-      already.foreach(p => entries += RunEntry(key, p, -1L, "ok", 0L)) // resumed
-      if (!failed.contains(key) && tier.seconds <= TierSpec.T1d.seconds) {
-        // pruned read of exactly the touched partitions; a missing
-        // snapshot (first-ever run whose commit failed) degrades to a
-        // recorded failure, never an unhandled crash
-        try finer = tbl.read(touchedDays)
-        catch { case _: IllegalStateException => failed += key }
-      }
-    }
-
-    // Shared stage harness for the non-cascade tiers (blocks + sketch
-    // ladders): resume-skip, dependency-aware failure isolation, one
-    // copy-on-write commit, per-partition lineage + metrics — identical
-    // semantics to the cascade loop above.
+    // One stage harness for every tier: resume-skip, dependency-aware
+    // failure isolation, one copy-on-write commit, per-partition
+    // lineage + metrics. `compute(todo)` reads only the partitions it
+    // recomputes, so a resume under a wider touched set leaves the
+    // partitions already committed ok untouched.
     def runStage(key: String, upstream: Option[String],
                  table: TierTable,
                  partitions: Set[String] = touchedDays)
@@ -259,6 +179,40 @@ final class TierRunner(spark: SparkSession, root: String,
       }
     }
 
+    def dayCol(c: org.apache.spark.sql.Column) =
+      c - (c % TierSpec.T1d.seconds)
+    val touched30d: Set[String] =
+      touchedDays.map(bucketStart(_, TierSpec.T30d.seconds))
+
+    // ---- The value cascade: 5m from the touched raw days, each coarser
+    // tier merged from the finer tier's committed partitions. Flagged
+    // measures: three-state missingness (OK/NODATA/UNDETECT counts,
+    // OK-only value aggregates) travels the whole production cascade.
+    // text_sha: the byte-identical-text invariant, hashed from the html
+    // payload per raw row and XOR-folded up every tier. Day is the
+    // partition unit up to 1d; a 30d bucket is its own partition,
+    // rebuilt whole from the 1d partitions that are members of it.
+    val finerOf = TierSpec.cascade.zip(None +: TierSpec.cascade.map(Some(_)))
+    for ((tier, finer) <- finerOf) {
+      val byDay = tier.seconds <= TierSpec.T1d.seconds
+      runStage(tier.name, finer.map(_.name), tableFor(tier),
+               if (byDay) touchedDays else touched30d) { todo =>
+        val rolled = finer match {
+          case None =>
+            Rollup.fromRaw(rawTable.read(todo), tier, family = Rollup.Flagged,
+              textSha = Some(xxhash64(
+                graft.ingest.WebPages.extractText(col("html")))))
+          case Some(f) =>
+            val src = tableFor(f)
+            Rollup.cascade(
+              src.read(if (byDay) todo else memberDays(src, todo, tier.seconds)),
+              tier)
+        }
+        rolled.withColumn("day_epoch",
+          if (byDay) dayCol(col("bucket_epoch")) else col("bucket_epoch"))
+      }
+    }
+
     // ---- Gorilla value blocks: one compressed binary block per
     // (series, day) over the 5m points (north-star binary column) ----
     // THREE-STATE blocks: the value channel encodes every bucket
@@ -286,8 +240,6 @@ final class TierRunner(spark: SparkSession, root: String,
     // register union) — never a raw re-scan. Day is the partition unit
     // at both levels, so I1/I2 watermark recompute and late-data
     // partition rebuilds work exactly as for the value cascade.
-    def dayCol(c: org.apache.spark.sql.Column) =
-      c - (c % TierSpec.T1d.seconds)
     // The three finest-level ladders share one grouping key, so ONE
     // raw pass (one scan + one shuffle, built lazily and only if some
     // 1h stage actually has work) feeds all three commits; each stage
@@ -330,8 +282,6 @@ final class TierRunner(spark: SparkSession, root: String,
     // 30d buckets are rebuilt by MERGING exactly the 1d partitions that
     // are members of a touched bucket (register union / per-band sum /
     // KLL merge — still never a raw re-scan).
-    val touched30d: Set[String] =
-      touchedDays.map(bucketStart(_, TierSpec.T30d.seconds))
     def members30(tbl: TierTable, todo: Set[String]): Set[String] =
       memberDays(tbl, todo, TierSpec.T30d.seconds)
     runStage("hist_30d", Some("hist_1d"), histTable30d, touched30d) { todo =>
@@ -516,8 +466,8 @@ final case class RunEntry(tier: String, partition: String, rows: Long,
 /** Checkpoint manifest of one tier run: per (tier, partition) lineage
   * + metrics, plus the curation-ruleset version the run executed under
   * (the auditable config surface — [[graft.core.CurationRuleset]]).
-  * JSON format is hand-rolled (no external deps) and parsed back only
-  * for resume status.
+  * The JSON is written by hand and read back with [[graft.core.Json]],
+  * only for resume status.
   */
 final case class RunManifest(runId: String, inputSnapshot: Long,
                              entries: Seq[RunEntry],
@@ -538,9 +488,11 @@ final case class RunManifest(runId: String, inputSnapshot: Long,
 object RunManifest {
   /** partition-status map "tier/partition" -> status. */
   def parseStatuses(json: String): Map[String, String] = {
-    val re = ("\\{\"tier\":\"([^\"]*)\",\"partition\":\"([^\"]*)\"," +
-      "\"rows\":(-?\\d+),\"status\":\"([^\"]*)\"(?:,\"elapsed_ms\":(-?\\d+))?\\}").r
-    re.findAllMatchIn(json)
-      .map(m => s"${m.group(1)}/${m.group(2)}" -> m.group(4)).toMap
+    import graft.core.Json.field
+    import scala.jdk.CollectionConverters._
+    field(graft.core.Json.parse(json), "partitions").elements().asScala
+      .map(e => s"${field(e, "tier").asText}/${field(e, "partition").asText}" ->
+        field(e, "status").asText)
+      .toMap
   }
 }

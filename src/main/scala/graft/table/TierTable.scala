@@ -292,9 +292,6 @@ final class TierTable(val root: String, spark: SparkSession) {
       case (k, p) if p.path.nonEmpty => k
     }.toSet).getOrElse(Set.empty)
 
-  def readSnapshot(snapshot: Long): DataFrame =
-    readManifest(manifest(snapshot), None)
-
   private def readManifest(m: Manifest, only: Option[Set[String]]): DataFrame = {
     // Partition leaves of one snapshot live under different snap=<k>
     // dirs (copy-on-write); both levels are Hive-style, so ONE
@@ -529,23 +526,6 @@ final class TierTable(val root: String, spark: SparkSession) {
     }
     deletable
   }
-
-  /** Partitions whose content changed between two snapshots — the
-    * snapshot-diff that drives incremental recompute of coarser tiers
-    * (watermark semantics, vph5_to_vpts.py:120-144).
-    */
-  def changedPartitions(fromSnapshot: Option[Long], toSnapshot: Long)
-      : Set[String] = {
-    val to = manifest(toSnapshot).partitions
-    fromSnapshot match {
-      case None => to.keySet
-      case Some(f) =>
-        val from = manifest(f).partitions
-        to.filter { case (k, v) =>
-          !from.get(k).exists(o => o.checksum == v.checksum && o.rows == v.rows)
-        }.keySet
-    }
-  }
 }
 
 /** Raised when a read finds legitimately NO data: the table has no
@@ -636,15 +616,12 @@ object Manifest {
   val FormatVersion: Long = 4L
   val ReadableVersions: Set[Long] = Set(2L, 3L, FormatVersion)
 
-  /** Minimal JSON reader for manifests this class wrote (no external
-    * JSON library; the format is fully under our control).
-    */
+  /** Read a manifest written by [[Manifest.toJson]] (format v2–v4). */
   def fromJson(s: String): Manifest = {
-    import scala.util.matching.Regex
-    def longField(name: String): Long =
-      s"""\"$name\":(-?\\d+)""".r.findFirstMatchIn(s).get.group(1).toLong
-    val fmt = """"format":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
-    fmt match {
+    import graft.core.Json.{field, opt}
+    import scala.jdk.CollectionConverters._
+    val root = graft.core.Json.parse(s)
+    opt(root, "format").map(_.asLong) match {
       case None => throw new IllegalStateException(
         "unversioned (pre-v2) tier-table manifest: this table was " +
           "written with the legacy data/s<k> layout and must be " +
@@ -655,31 +632,22 @@ object Manifest {
             ReadableVersions.toSeq.sorted.mkString("{", ",", "}"))
       case _ => ()
     }
-    val parent = """"parent":(null|\d+)""".r.findFirstMatchIn(s).get.group(1) match {
-      case "null" => None
-      case n      => Some(n.toLong)
-    }
-    val partitionCol =
-      """"partition_col":"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(s).get.group(1)
-    val bucketCol =
-      """"bucket_col":"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(s).map(_.group(1))
-    val entryRe: Regex =
-      ("\"((?:[^\"\\\\]|\\\\.)*)\":\\{\"path\":\"((?:[^\"\\\\]|\\\\.)*)\"," +
-        "\"rows\":(-?\\d+),\"checksum\":(-?\\d+)" +
-        "(?:,\"lineage\":\\{\"input_snapshot\":(-?\\d+),\"status\":\"((?:[^\"\\\\]|\\\\.)*)\"" +
-        "(?:,\"error\":\"((?:[^\"\\\\]|\\\\.)*)\")?" +
-        "(?:,\"id_min\":(-?\\d+),\"id_max\":(-?\\d+))?\\})?\\}").r
-    val body = s.substring(s.indexOf("\"partitions\":") + "\"partitions\":".length)
-    val parts = entryRe.findAllMatchIn(body).map { m =>
-      val lineage = Option(m.group(5)).map(is =>
-        PartitionLineage(is.toLong, m.group(6), Option(m.group(7)),
-                         Option(m.group(8)).map(_.toLong),
-                         Option(m.group(9)).map(_.toLong)))
-      m.group(1) -> PartitionEntry(m.group(2), m.group(3).toLong,
-                                   m.group(4).toLong, lineage)
+    val parts = field(root, "partitions").properties().asScala.map { e =>
+      val p = e.getValue
+      val lineage = opt(p, "lineage").map(l =>
+        PartitionLineage(field(l, "input_snapshot").asLong,
+                         field(l, "status").asText,
+                         opt(l, "error").map(_.asText),
+                         opt(l, "id_min").map(_.asLong),
+                         opt(l, "id_max").map(_.asLong)))
+      e.getKey -> PartitionEntry(field(p, "path").asText,
+                                 field(p, "rows").asLong,
+                                 field(p, "checksum").asLong, lineage)
     }.toMap
-    Manifest(longField("snapshot"), parent, longField("timestamp_ms"),
-             partitionCol, parts, bucketCol)
+    Manifest(field(root, "snapshot").asLong, opt(root, "parent").map(_.asLong),
+             field(root, "timestamp_ms").asLong,
+             field(root, "partition_col").asText, parts,
+             opt(root, "bucket_col").map(_.asText))
   }
 }
 

@@ -30,17 +30,17 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     // the pinned contract: state counts sum; value measures are OK-only
     // and merge null-skipping — so any cascade composition equals the
     // direct flagged rollup at the same tier
-    var finer = Rollup.fromRawFlagged(pages, TierSpec.T5m)
+    var finer = Rollup.fromRaw(pages, TierSpec.T5m, family = Rollup.Flagged)
     for (tier <- TierSpec.cascade.tail) {
-      finer = Rollup.cascadeFlagged(finer, tier)
-      val direct = Rollup.fromRawFlagged(pages, tier)
+      finer = Rollup.cascade(finer, tier)
+      val direct = Rollup.fromRaw(pages, tier, family = Rollup.Flagged)
       assert(finer.exceptAll(direct).isEmpty && direct.exceptAll(finer).isEmpty,
         s"flagged merge != direct at ${tier.name}")
     }
   }
 
   test("flagged measures: NODATA/UNDETECT rows never contaminate value aggregates") {
-    val flagged = Rollup.fromRawFlagged(pages, TierSpec.T1h)
+    val flagged = Rollup.fromRaw(pages, TierSpec.T1h, family = Rollup.Flagged)
     val okOnly = Rollup.fromRaw(
       pages.filter(col("flag") === Flag.OK.toInt), TierSpec.T1h)
       .select(col("domain"), col("bucket_epoch"),
@@ -60,19 +60,6 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       col("sum_value_micros").isNotNull).isEmpty)
     // and such buckets exist in the corpus (the contract is exercised)
     assert(flagged.filter(col("n_ok") === 0).count() > 0)
-  }
-
-  test("salted flagged rollup equals unsalted (with text_sha) — skew mode is free") {
-    val sha = Some(xxhash64(WebPages.extractText(col("html"))))
-    val plain = Rollup.fromRawFlagged(pages, TierSpec.T1h, textSha = sha)
-    val salted = Rollup.fromRawFlaggedSalted(pages, TierSpec.T1h, 8, textSha = sha)
-    assert(plain.exceptAll(salted).isEmpty && salted.exceptAll(plain).isEmpty)
-  }
-
-  test("salted rollup equals unsalted rollup") {
-    val plain = Rollup.fromRaw(pages, TierSpec.T1h)
-    val salted = Rollup.fromRawSalted(pages, TierSpec.T1h, saltBuckets = 7)
-    assert(plain.exceptAll(salted).isEmpty && salted.exceptAll(plain).isEmpty)
   }
 
   test("bucket starts are tier-aligned") {

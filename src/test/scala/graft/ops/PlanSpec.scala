@@ -125,8 +125,9 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("flagged rollup keeps the partial-agg + two-exchange cascade shape") {
-    val p = plan(Rollup.cascadeFlagged(
-      Rollup.fromRawFlagged(WebPages.load(spark, sfDir), TierSpec.T5m),
+    val p = plan(Rollup.cascade(
+      Rollup.fromRaw(WebPages.load(spark, sfDir), TierSpec.T5m,
+                     family = Rollup.Flagged),
       TierSpec.T1h))
     assert(p.contains("partial_sum") || p.contains("partial_count"), p.take(800))
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 2)
@@ -190,12 +191,6 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     assert(p.contains("WindowGroupLimit"), p.take(800))
     assert("WindowGroupLimit[^\n]*Partial".r.findFirstIn(p).isDefined,
       p.take(1200))
-  }
-
-  test("salted rollup phase 1 keys include the salt (skew spread)") {
-    val o = optimized(Rollup.fromRawSalted(
-      WebPages.load(spark, sfDir), TierSpec.T1h, saltBuckets = 8))
-    assert(o.contains("_salt"), o.take(800))
   }
 
   test("two-ruleset A/B queries read the corpus ONCE (no per-version scan)") {

@@ -21,6 +21,12 @@ class TierRunnerSpec extends AnyFunSuite with SparkSuite {
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  /** Direct flagged rollup of `pages` at `tier`, through the cascade. */
+  private def flaggedTier(pages: DataFrame, tier: TierSpec): DataFrame =
+    TierSpec.cascade.takeWhile(_.seconds <= tier.seconds).tail
+      .foldLeft(Rollup.fromRaw(pages, TierSpec.T5m, family = Rollup.Flagged))(
+        Rollup.cascade(_, _))
+
   test("two incremental ingests converge to the full-recompute rollup") {
     val root = tmpRoot()
     val runner = new TierRunner(spark, root)
@@ -38,10 +44,8 @@ class TierRunnerSpec extends AnyFunSuite with SparkSuite {
     assert(m2.okCount > 0)
 
     // Every tier must equal a from-scratch rollup of the full input.
-    val full5m = Rollup.fromRawFlagged(pages, TierSpec.T5m)
-    val full1h = Rollup.cascadeFlagged(full5m, TierSpec.T1h)
-    val full1d = Rollup.cascadeFlagged(full1h, TierSpec.T1d)
-    val full30d = Rollup.cascadeFlagged(full1d, TierSpec.T30d)
+    val Seq(full5m, full1h, full1d, full30d) =
+      TierSpec.cascade.map(flaggedTier(pages, _))
     val cols = Seq("domain", "bucket_epoch", "n", "sum_chars",
                    "sum_value_micros", "min_value_micros", "max_value_micros")
       .map(col)
@@ -75,9 +79,7 @@ class TierRunnerSpec extends AnyFunSuite with SparkSuite {
     assert(touched == Set((1704412800L).toString)) // 2024-01-05 epoch day
     runner.run("r2", touched)
 
-    val full1d = Rollup.cascadeFlagged(
-      Rollup.cascadeFlagged(Rollup.fromRawFlagged(pages, TierSpec.T5m), TierSpec.T1h),
-      TierSpec.T1d)
+    val full1d = flaggedTier(pages, TierSpec.T1d)
     val cols = Seq("domain", "bucket_epoch", "n", "sum_chars",
                    "sum_value_micros", "min_value_micros", "max_value_micros")
       .map(col)
@@ -180,15 +182,46 @@ class TierRunnerSpec extends AnyFunSuite with SparkSuite {
     assert(m3.entries.forall(e => e.status == "ok" && e.rows == -1L))
   }
 
+  test("resume under a wider touched set leaves already-ok partitions untouched") {
+    val root = tmpRoot()
+    val runner = new TierRunner(spark, root)
+    val pages = WebPages.load(spark, sfDir) // 2024-01-02 and 2024-01-03
+      .filter(col("warc_epoch") >= 1704153600L && col("warc_epoch") < 1704326400L)
+    val days = runner.ingest(pages).toSeq.sorted
+    assert(days.size == 2)
+    val (d1, d2) = (days(0), days(1))
+    val valueTiers = Seq(TierSpec.T5m, TierSpec.T1h, TierSpec.T1d)
+    def entryOf(t: TierSpec, day: String) =
+      new graft.table.TierTable(s"$root/tier_${t.name}", spark)
+        .currentManifest.get.partitions(day)
+    runner.run("r", Set(d1))
+    val before = valueTiers.map(t => t -> entryOf(t, d1)).toMap
+    val m2 = runner.run("r", Set(d1, d2))
+    for (t <- valueTiers) {
+      val after = entryOf(t, d1)
+      assert(after.lineage.exists(_.status == "ok"),
+        s"${t.name}/$d1 lineage: ${after.lineage}")
+      assert(after.path == before(t).path, s"${t.name}/$d1 was rewritten")
+      val resumed = m2.entries.filter(e => e.tier == t.name && e.partition == d1)
+      assert(resumed.map(_.rows) == Seq(-1L), s"${t.name}/$d1: $resumed")
+      assert(m2.entries.exists(e =>
+        e.tier == t.name && e.partition == d2 && e.status == "ok" && e.rows > 0))
+    }
+    val full1d = flaggedTier(pages, TierSpec.T1d)
+    val cols = Seq("domain", "bucket_epoch", "n", "n_ok", "sum_value_micros").map(col)
+    assert(sortedRows(runner.tier(TierSpec.T1d).select(cols: _*)) ==
+           sortedRows(full1d.select(cols: _*)))
+  }
+
   test("text_sha invariant travels the cascade: tier XOR equals direct XOR") {
     val root = tmpRoot()
     val runner = new TierRunner(spark, root)
     val pages = WebPages.load(spark, sfDir)
     runner.run("r1", runner.ingest(pages))
     val direct = {
-      val t5m = Rollup.fromRawFlagged(pages, TierSpec.T5m,
+      val t5m = Rollup.fromRaw(pages, TierSpec.T5m, family = Rollup.Flagged,
         textSha = Some(xxhash64(WebPages.extractText(col("html")))))
-      Rollup.cascadeFlagged(Rollup.cascadeFlagged(t5m, TierSpec.T1h), TierSpec.T1d)
+      Rollup.cascade(Rollup.cascade(t5m, TierSpec.T1h), TierSpec.T1d)
         .select("domain", "bucket_epoch", "text_sha")
     }
     val fromTiers = runner.tier(TierSpec.T1d)
@@ -255,9 +288,7 @@ class TierRunnerSpec extends AnyFunSuite with SparkSuite {
     assert(runner.rawRows == rows1,
       "replayed increment must not duplicate raw rows")
     runner.run("r1", d1)
-    val full1d = Rollup.cascadeFlagged(
-      Rollup.cascadeFlagged(Rollup.fromRawFlagged(pages, TierSpec.T5m), TierSpec.T1h),
-      TierSpec.T1d)
+    val full1d = flaggedTier(pages, TierSpec.T1d)
     val cols = Seq("domain", "bucket_epoch", "n", "sum_value_micros").map(col)
     assert(sortedRows(runner.tier(TierSpec.T1d).select(cols: _*)) ==
            sortedRows(full1d.select(cols: _*)))
@@ -290,9 +321,7 @@ class TierRunnerSpec extends AnyFunSuite with SparkSuite {
     val m = runner.rebuildAll("full")
     assert(m.entries.forall(e => e.status == "ok" && e.rows >= 0),
       "rebuild must recompute (not resume) every partition")
-    val full1d = Rollup.cascadeFlagged(
-      Rollup.cascadeFlagged(Rollup.fromRawFlagged(pages, TierSpec.T5m), TierSpec.T1h),
-      TierSpec.T1d)
+    val full1d = flaggedTier(pages, TierSpec.T1d)
     val cols = Seq("domain", "bucket_epoch", "n", "n_ok", "sum_value_micros").map(col)
     assert(sortedRows(runner.tier(TierSpec.T1d).select(cols: _*)) ==
            sortedRows(full1d.select(cols: _*)))
@@ -425,21 +454,6 @@ class TierRunnerSpec extends AnyFunSuite with SparkSuite {
     assert(sortedRows(runner.tier(TierSpec.T1d)) == before1d)
   }
 
-  test("skew mode (saltBuckets) produces identical tiers to the default runner") {
-    val pages = WebPages.load(spark, sfDir)
-      .filter(col("warc_epoch") < 1704672000L) // first 7 days: keep it quick
-    val a = new TierRunner(spark, tmpRoot())
-    val b = new TierRunner(spark, tmpRoot(), saltBuckets = Some(8))
-    a.run("r", a.ingest(pages))
-    b.run("r", b.ingest(pages))
-    for (t <- Seq(TierSpec.T5m, TierSpec.T1d)) {
-      val ca = a.tier(t).drop("day_epoch")
-      val cb = b.tier(t).drop("day_epoch")
-      assert(ca.exceptAll(cb).isEmpty && cb.exceptAll(ca).isEmpty,
-        s"salted runner diverged at ${t.name}")
-    }
-  }
-
   test("TierMain e2e: the spark-submit entry ingests, cascades, checkpoints") {
     // getOrCreate inside main reuses the suite session (one context per
     // JVM) — exactly how spark-submit hands it an existing session
@@ -531,5 +545,30 @@ class TierRunnerSpec extends AnyFunSuite with SparkSuite {
       graft.table.Manifest.fromJson(future)
     }
     assert(e2.getMessage.contains("99"))
+  }
+
+  test("v2 and v3 manifests still read (ReadableVersions)") {
+    import graft.table.{Manifest, PartitionEntry, PartitionLineage}
+    val v2 = """{"format":2,"snapshot":5,"parent":4,"timestamp_ms":17,""" +
+      """"partition_col":"day_epoch","partitions":{""" +
+      """"1704067200":{"path":"data/snap=5/day_epoch=1704067200","rows":12,""" +
+      """"checksum":-42,"lineage":{"input_snapshot":3,"status":"ok"}},""" +
+      """"1704153600":{"path":"","rows":0,"checksum":0}}}"""
+    assert(Manifest.fromJson(v2) == Manifest(5L, Some(4L), 17L, "day_epoch", Map(
+      "1704067200" -> PartitionEntry("data/snap=5/day_epoch=1704067200", 12L,
+        -42L, Some(PartitionLineage(3L, "ok"))),
+      "1704153600" -> PartitionEntry("", 0L, 0L, None))))
+    val v3 = """{"format":3,"snapshot":7,"parent":null,"timestamp_ms":1,""" +
+      """"partition_col":"ingest_seq","partitions":{"2":{""" +
+      """"path":"data/snap=7/ingest_seq=2","rows":9,"checksum":123,""" +
+      """"lineage":{"input_snapshot":2,"status":"ok","id_min":100,"id_max":199}}}}"""
+    assert(Manifest.fromJson(v3) == Manifest(7L, None, 1L, "ingest_seq", Map(
+      "2" -> PartitionEntry("data/snap=7/ingest_seq=2", 9L, 123L,
+        Some(PartitionLineage(2L, "ok", idMin = Some(100L), idMax = Some(199L)))))))
+    // a malformed manifest names the missing field
+    val e = intercept[IllegalStateException] {
+      Manifest.fromJson(v3.replace(""""rows":9,""", ""))
+    }
+    assert(e.getMessage.contains("'rows'"), e.getMessage)
   }
 }
